@@ -3,8 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.create(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
     // warm the session (codegen pipeline, shuffle machinery, parquet
     // footer reads) so per-query timings reflect steady state

@@ -3,6 +3,9 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Sqrt}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 import graft.functions.{MinHashSigExpr, VecCodeL2Sq, VecCosine, VecDot, VecL2Sq, WordShinglesExpr}
 import graft.operators.SimHash.SimHashExpr
 
@@ -216,24 +219,38 @@ object GraftFunctions {
   }
 }
 
-/** `spark.sql.extensions`-style injection: the SQL function surface plus
-  * graft's optimizer rules (levenshtein length pre-filter; IVF ANN
-  * index-scan rewrite for `ORDER BY vec_l2(...) LIMIT k`). */
+/** graft's optimizer rules and planner strategies, listed once: read by
+  * [[GraftExtensions]] at session build and by [[GraftSession.create]]
+  * to re-attach any a pre-existing session lacks.
+  *  - levenshtein length pre-filter; epoch-predicate pushdown;
+  *  - IVF and sparse-postings ANN index-scan rewrites for
+  *    `ORDER BY <dist>(…) LIMIT k`;
+  *  - the driver-local fold of array-constructor generators over local
+  *    relations (the per-request SSE event tail).
+  * The strategies plan the iterative-filtered-ANN leaves the index
+  * rewrites plant for `WHERE pred ORDER BY <dist>(…, lit) LIMIT k` over
+  * persisted stores (dense IVF and sparse postings variants). */
+object GraftExtensions {
+  val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(
+    graft.plans.LevenshteinPrefilterRule, graft.plans.EpochPushdownRule,
+    graft.plans.IvfScanRewriteRule, graft.plans.SparseScanRewriteRule,
+    graft.plans.LocalGenerateFoldRule)
+
+  val plannerStrategies: Seq[SparkStrategy] = Seq(
+    graft.plans.IvfIterativeScanStrategy, graft.plans.SparseIterativeScanStrategy)
+}
+
+/** `spark.sql.extensions`-style injection: the SQL function surface,
+  * graft's optimizer rules and planner strategies, and the index-lifecycle
+  * SQL parser. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, builder) =>
       e.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft", null, name), builder))
     }
-    e.injectOptimizerRule(_ => graft.plans.LevenshteinPrefilterRule)
-    e.injectOptimizerRule(_ => graft.plans.EpochPushdownRule)
-    e.injectOptimizerRule(_ => graft.plans.IvfScanRewriteRule)
-    e.injectOptimizerRule(_ => graft.plans.SparseScanRewriteRule)
-    // plans the iterative-filtered-ANN leaves the index rewrites plant
-    // for `WHERE pred ORDER BY <dist>(…, lit) LIMIT k` over persisted
-    // stores (dense IVF and sparse postings variants)
-    e.injectPlannerStrategy(_ => graft.plans.IvfIterativeScanStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.SparseIterativeScanStrategy)
+    GraftExtensions.optimizerRules.foreach(r => e.injectOptimizerRule(_ => r))
+    GraftExtensions.plannerStrategies.foreach(st => e.injectPlannerStrategy(_ => st))
     // SQL surface for the index LIFECYCLE: CREATE/APPEND/UPSERT/DELETE/
     // COMPACT GRAFT [SPARSE] INDEX … statements lower onto the library
     // maintenance calls; everything else delegates to the stock parser

@@ -12,6 +12,11 @@ import org.apache.spark.sql.SparkSession
   * `spark.sql.extensions=graft.GraftExtensions` user would get it. */
 object GraftSession {
 
+  /** Local cores for a run: `SPARK_GRAFT_CPUS`, else every core the host
+    * gives this JVM. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -39,30 +44,26 @@ object GraftSession {
     * handled by the extensions, but getOrCreate may return an EXISTING
     * session built without them — e.g. the shared test JVM — and the
     * explicit register keeps the function surface present either way.
-    * The OPTIMIZER RULES get the same treatment: a pre-existing session
-    * silently lacking them would make Verify/Bench exercise exact scans
-    * instead of the index plans, so any missing rule is re-attached via
-    * `experimental.extraOptimizations` — the post-analysis batch, same
-    * placement the extensions give them.) */
+    * The OPTIMIZER RULES and PLANNER STRATEGIES of
+    * [[GraftExtensions.optimizerRules]] / [[GraftExtensions.plannerStrategies]]
+    * get the same treatment: a pre-existing session silently lacking them
+    * would make Verify/Bench exercise exact scans instead of the index
+    * plans (or fail to plan the rewritten subtrees), so any missing one
+    * is re-attached via `experimental.extraOptimizations` /
+    * `experimental.extraStrategies`.) */
   def create(master: String, shufflePartitions: Int): SparkSession = {
     val spark = builder(master, shufflePartitions).getOrCreate()
     GraftFunctions.register(spark)
-    val rules = Seq(graft.plans.LevenshteinPrefilterRule, graft.plans.EpochPushdownRule,
-      graft.plans.IvfScanRewriteRule, graft.plans.SparseScanRewriteRule)
     val present = spark.sessionState.optimizer.extendedOperatorOptimizationRules ++
       spark.experimental.extraOptimizations
-    val missing = rules.filterNot(r => present.exists(_ eq r))
+    val missing = GraftExtensions.optimizerRules.filterNot(r => present.exists(_ eq r))
     if (missing.nonEmpty)
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations ++ missing
-    // same re-attach treatment for the planner strategies behind the
-    // iterative filtered-ANN leaves: a pre-existing session without
-    // them would fail to plan the rewritten subtrees
-    Seq(graft.plans.IvfIterativeScanStrategy, graft.plans.SparseIterativeScanStrategy)
-      .foreach { st =>
-        if (!spark.sessionState.planner.strategies.exists(_ eq st))
-          spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ st
-      }
+    val strategies = spark.sessionState.planner.strategies
+    val absent = GraftExtensions.plannerStrategies.filterNot(st => strategies.exists(_ eq st))
+    if (absent.nonEmpty)
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies ++ absent
     spark
   }
 }

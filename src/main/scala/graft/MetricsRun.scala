@@ -18,8 +18,8 @@ object MetricsRun {
     val d = if (args.length >= 2) args(1) else "/root/testdata/sf0.1"
     val names = args.drop(2).toSeq
     require(names.nonEmpty, "MetricsRun: name at least one query")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.create(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val jobs = new AtomicInteger(0)

@@ -18,8 +18,8 @@ object PlanDump {
     val d = if (args.length >= 3) args(2) else "/root/testdata/sf0.1"
     val names = args.drop(3).toSeq
     require(names.nonEmpty, "PlanDump: name at least one query")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.create(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     for (name <- names) {

@@ -1,7 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Per-hit LLM summary stage — the Spark re-expression of the reference's
   * serving loop: for each KNN hit, build the chat prompt and ask the model
@@ -107,27 +112,38 @@ object Summarizer {
   /** [[summarize]] with a PER-ROW query column (the serving case: each
     * stream row carries its own user query; a regexp column pattern
     * can't express that since Spark requires foldable patterns). Same
-    * batched external-call shape. */
+    * batched external-call shape, one batching function on two paths:
+    *  - a batch LOCAL input (analyzed plan a `LocalRelation`, after
+    *    folding projections over it — a request's hits built with
+    *    `createDataFrame`/`toDF`) is summarized on the driver and returned
+    *    as a `LocalRelation`: the rows are already there, and a Spark job
+    *    to batch ~5 of them costs more than the calls themselves;
+    *  - any other input, streaming ones included, runs the function
+    *    inside `mapPartitions` (one [[invokeChat]] per `batchSize` rows
+    *    per partition).
+    * Both give the same rows, order and schema (`SummarizerSpec`). */
   def summarizeDynamic(df: DataFrame, textCol: String, queryCol: String,
                        batchSize: Int = 32, outCol: String = "summary",
                        ctx: Int = 4, maxLen: Int = 300,
                        client: ChatClient = DeterministicClient): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(
-      df.schema.fields :+ org.apache.spark.sql.types.StructField(outCol,
-        org.apache.spark.sql.types.StringType))
+    val schema = StructType(df.schema.fields :+ StructField(outCol, StringType))
     val textIdx = df.schema.fieldIndex(textCol)
     val queryIdx = df.schema.fieldIndex(queryCol)
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    df.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        val pairs = batch.map(r => (Option(r.getString(textIdx)).getOrElse(""),
-          Option(r.getString(queryIdx)).getOrElse("")))
-        val sums = invokeChat(pairs, ctx, maxLen, client = client)
-        batch.iterator.zip(sums.iterator).map { case (r, s) =>
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ s)
-        }
-      }
-    }(enc)
+    val summarizeRows: Iterator[Row] => Iterator[Row] = _.grouped(batchSize).flatMap { batch =>
+      val pairs = batch.map(r => (Option(r.getString(textIdx)).getOrElse(""),
+        Option(r.getString(queryIdx)).getOrElse("")))
+      val sums = invokeChat(pairs, ctx, maxLen, client = client)
+      batch.iterator.zip(sums.iterator).map { case (r, s) => Row.fromSeq(r.toSeq :+ s) }
+    }
+    graft.plans.LocalGenerateFoldRule.toLocal(df.queryExecution.analyzed) match {
+      case local: LocalRelation if !local.isStreaming =>
+        val toRow = ExpressionEncoder(RowEncoder.encoderFor(local.schema))
+          .resolveAndBind().createDeserializer()
+        val out = summarizeRows(local.data.iterator.map(toRow)).toSeq
+        df.sparkSession.createDataFrame(out.asJava, schema)
+      case _ =>
+        df.mapPartitions(summarizeRows)(RowEncoder.encoderFor(schema))
+    }
   }
 
   /** Column-level stub — codegen'd regexp, oracle-replayable in DuckDB as

@@ -35,6 +35,38 @@ class StoreStreamSpec extends SparkSpec {
     assert(pf.exists(_.group(1).nonEmpty), plan.take(1500))
   }
 
+  test("vector store: write conforms rows to the schema and fails loud on a missing column") {
+    import spark.implicits._
+    val out = tmp("vstore_schema")
+    val rows = Seq(("a", Seq(1f, 2f), "alpha", "f.pdf", 3), ("b", Seq(3f, 4f), "beta", "g.pdf", 4))
+      .toDF("id", "embedding", "origntext", "filename", "pagenumber")
+    val err = intercept[IllegalArgumentException](
+      VectorStore.write(rows.drop("origntext"), out, numBuckets = 4))
+    assert(err.getMessage.contains("origntext"), err.getMessage)
+
+    // an int pagenumber and an extra column: stored as the declared
+    // bigint, extra column dropped
+    VectorStore.write(rows.withColumn("extra", lit(1)), out, numBuckets = 4)
+    val files = spark.read.parquet(out)
+    assert(files.schema("pagenumber").dataType == org.apache.spark.sql.types.LongType)
+    assert(!files.columns.contains("extra"))
+    assert(VectorStore.read(spark, out).orderBy("id").select("pagenumber").as[Long]
+      .collect().toSeq == Seq(3L, 4L))
+  }
+
+  test("vector store: building read and lookup starts no Spark job") {
+    val out = tmp("vstore_jobs")
+    val rows = spark.range(40).select(col("id").cast("string").as("id"),
+      array(col("id").cast("float")).as("embedding"), lit("t").as("origntext"),
+      lit("f.pdf").as("filename"), col("id").as("pagenumber"))
+    VectorStore.write(rows, out, numBuckets = 8)
+    val (back, readJobs) = JobCount(spark)(VectorStore.read(spark, out))
+    val (hit, lookupJobs) = JobCount(spark)(VectorStore.lookup(spark, out, "7", numBuckets = 8))
+    assert(readJobs == 0 && lookupJobs == 0, s"read: $readJobs, lookup: $lookupJobs jobs")
+    assert(back.count() == 40)
+    assert(hit.select("pagenumber").collect().map(_.getLong(0)).toSeq == Seq(7L))
+  }
+
   test("streaming curation gates match their batch execution exactly") {
     import graft.operators.Curation
     val in = tmp("curate_in")

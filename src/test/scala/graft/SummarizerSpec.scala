@@ -1,9 +1,51 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, MapPartitions}
 import org.apache.spark.sql.functions._
-import graft.pipeline.Summarizer
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import graft.pipeline.{ChatClient, DeterministicClient, Summarizer}
+
+/** A chat endpoint that is always down. */
+object FailingChatClient extends ChatClient {
+  override def completeBatch(pairs: Seq[(String, String)], ctx: Int, maxLen: Int): Seq[String] =
+    throw new RuntimeException("endpoint down")
+}
 
 class SummarizerSpec extends SparkSpec {
+
+  private val hitSchema = StructType(Seq(
+    StructField("id", StringType), StructField("url", StringType),
+    StructField("pagenumber", LongType), StructField("filename", StringType),
+    StructField("text", StringType), StructField("query", StringType)))
+
+  private val hitRows = Seq(
+    Row("h1", "https://x/a.pdf", 1L, "a.pdf", "Spark is an engine; spark runs jobs", "spark"),
+    Row("h2", "https://x/b.pdf", 2L, "b.pdf", null, "spark"),
+    Row("h3", "https://x/c.pdf", 3L, "c.pdf", "vectors and spark together", null),
+    Row("h4", "https://x/d.pdf", 4L, "d.pdf", "no match here", "spark"),
+    Row("h5", "https://x/e.pdf", 5L, "e.pdf", "graft serves \"quoted\" spark", "spark"),
+    Row("h6", "https://x/f.pdf", 6L, "f.pdf", "", ""),
+    Row("h7", "https://x/g.pdf", 7L, "g.pdf", "graft serves graft queries", "graft"))
+
+  /** The hits as a driver-local relation, as a serve request builds them. */
+  private def localHits: DataFrame = spark.createDataFrame(hitRows.asJava, hitSchema)
+
+  /** The same hits as a 3-partition RDD-backed frame. */
+  private def partitionedHits: DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(hitRows, 3), hitSchema)
+
+  private def mapsPartitions(p: LogicalPlan) = p.collectFirst { case m: MapPartitions => m }.nonEmpty
+
+  private def withFoldRule[T](body: => T): T = {
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+ graft.plans.LocalGenerateFoldRule
+    try body
+    finally spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations.filterNot(_ eq graft.plans.LocalGenerateFoldRule)
+  }
 
   test("KWIC stub: known extraction, truncation, empty on no match") {
     // one hit with full context both sides
@@ -80,5 +122,58 @@ class SummarizerSpec extends SparkSpec {
     val e2 = byId("id2")
     assert(e2.length == 3, e2.mkString("\n"))
     assert(e2(2) == """{"type":"complete","id":"id2","content":""}""")
+  }
+
+  test("summarizeDynamic: driver path == partitioned path (rows, order, schema)") {
+    for (client <- Seq[ChatClient](DeterministicClient, FailingChatClient)) {
+      // batchSize 2 < 7 rows: several chat batches on both paths
+      val onDriver = Summarizer.summarizeDynamic(localHits, "text", "query", batchSize = 2,
+        client = client)
+      val inTasks = Summarizer.summarizeDynamic(partitionedHits, "text", "query", batchSize = 2,
+        client = client)
+      assert(onDriver.queryExecution.analyzed.isInstanceOf[LocalRelation])
+      assert(mapsPartitions(inTasks.queryExecution.analyzed))
+      assert(onDriver.schema == inTasks.schema)
+      val (d, t) = (onDriver.collect().toSeq, inTasks.collect().toSeq)
+      assert(d == t)
+      assert(d.map(_.getString(0)) == hitRows.map(_.getString(0)))
+      val sums = d.map(_.getAs[String]("summary"))
+      if (client eq FailingChatClient) assert(sums.forall(_ == ""), sums)
+      else {
+        // null text / null query are summarized as ""
+        assert(sums == hitRows.map(r => Summarizer.summarizeText(
+          Option(r.getString(4)).getOrElse(""), Option(r.getString(5)).getOrElse(""))))
+        assert(sums.exists(_.nonEmpty))
+      }
+    }
+    // summarize (literal query) takes the same driver path
+    val lit1 = Summarizer.summarize(localHits.drop("query"), "text", "spark", batchSize = 3)
+    val part1 = Summarizer.summarize(partitionedHits.drop("query"), "text", "spark", batchSize = 3)
+    assert(lit1.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(lit1.schema == part1.schema && lit1.collect().toSeq == part1.collect().toSeq)
+  }
+
+  test("summarizeDynamic: a streaming input still plans mapPartitions") {
+    val stream = spark.readStream.format("rate").load()
+      .select(col("value").cast("string").as("text"), lit("spark").as("query"))
+    val s = Summarizer.summarizeDynamic(stream, "text", "query")
+    assert(s.isStreaming)
+    assert(mapsPartitions(s.queryExecution.analyzed))
+  }
+
+  test("serveEvents over summarized local hits collects with no Spark job") {
+    withFoldRule {
+      val (events, jobs) = JobCount(spark) {
+        Summarizer.serveEvents(Summarizer.summarizeDynamic(localHits, "text", "query"))
+          .select(col("id"), col("ev_seq"), col("payload")).collect()
+      }
+      assert(jobs == 0, s"$jobs jobs")
+      assert(events.length == 3 * hitRows.length)
+      // same events as the partitioned path, in the same order
+      val viaTasks = Summarizer.serveEvents(
+          Summarizer.summarizeDynamic(partitionedHits, "text", "query"))
+        .select(col("id"), col("ev_seq"), col("payload")).collect()
+      assert(events.toSeq == viaTasks.toSeq)
+    }
   }
 }
